@@ -35,9 +35,11 @@ Output: {"metric": "headline_suite_sec", "value": <total sec>,
                    "urls_per_sec":…, "median_sec":…, "samples":[…]},
          "cpus": N}
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-``scripts/bench_scaling.py``, which shells out to this file at two
-parallelism levels (results in BENCH/BASELINE.md).
+Cores default to the CPUs this process may run on and the driver heap to
+a quarter of the host's RAM; ``$SPARK_GRAFT_CPUS`` and
+``$SPARK_GRAFT_DRIVER_MEM`` override them.  Crawl-only benchmarks with
+per-layer metrics and the local[1]→local[4] scaling pair are in
+``perfbench/`` (``python3 perfbench/run.py --workload ...``).
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -52,7 +55,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
 
 # Registry ops benched at the full SF (others are covered by correctness
@@ -89,6 +92,13 @@ HEADLINE = [
     "host_quality_rollup",  # key-dup marking join + source rollup
     "token_shard_plan",     # distributed two-level prefix sum
 ]
+
+
+def _host_driver_mem() -> str:
+    """A quarter of MemTotal, at least 1 GiB, as a Spark memory string."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    return f"{max(1024, kb // 1024 // 4)}m"
 
 
 def _sf_from_dir(d: str) -> float:
@@ -203,12 +213,12 @@ def _make_spark():
         # 3x partitions per core (the 2-4x cluster rule): at exactly 1 task
         # per core one straggling Arrow-UDF task idles the other N-1 cores
         # for its whole tail — measured local[16] crawl rounds 120.4 s at
-        # 1x vs 88.2 s at 3x (scripts/bench_scaling.py --shuffle-mult)
+        # 1x vs 88.2 s at 3x
         shuffle_partitions=CPUS * 3,
         extra={
             "spark.ui.enabled": "false",
             "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "48g"
+                "SPARK_GRAFT_DRIVER_MEM", _host_driver_mem()
             ),
         },
     )
@@ -301,8 +311,9 @@ def main() -> int:
                 file=sys.stderr,
             )
         secs = sorted(s["sec"] for s in samples)
-        med_sec = secs[len(secs) // 2]
-        crawl = dict(next(s for s in samples if s["sec"] == med_sec))
+        med_sec = round(statistics.median(secs), 3)
+        # counts come from the sample nearest the (interpolated) median
+        crawl = dict(min(samples, key=lambda s: abs(s["sec"] - med_sec)))
         crawl["median_sec"] = med_sec
         crawl["samples"] = [
             {"sec": s["sec"], "urls_per_sec": s["urls_per_sec"]}
@@ -340,7 +351,7 @@ def main() -> int:
             _force(spec.fn(spark, SF_DIR))
             samples.append(round(time.time() - t0, 3))
         cold[name] = samples[0]
-        times[name] = sorted(samples)[len(samples) // 2]
+        times[name] = round(statistics.median(samples), 3)
 
     times["crawl_3rounds"] = crawl["median_sec"]
 

@@ -10,10 +10,11 @@ no false negatives, so skipping is sound).  The final seen set is therefore
 byte-identical to the exact plan (property- and equivalence-tested).
 
 Scale shape: one shard per url_hash bucket, each sized for n/P keys.  At a
-10^10 frontier with P=4096 buckets and fpp 1e-3, a shard is ~4.3 MB — it
-rides to executors as a task-closure broadcast and probes whole Arrow
-batches vectorized (mapInPandas), amortizing the load per partition, not
-per row.
+10^10 frontier with P=4096 buckets and fpp 1e-3, a shard is ~4.3 MB.
+Shards live in the snapshot store and reach the probe through a cogroup
+on the bucket (bloom_tag_store / cuckoo_tag_store): each task loads only
+its own bucket's shards and probes the bucket's rows as one numpy batch;
+no shard byte passes through the driver or a task closure.
 
 Cuckoo shards add deletion (re-crawl eviction) with 4-slot buckets and
 16-bit fingerprints (partial-key cuckoo hashing, Fan et al. 2014 — public
@@ -23,7 +24,6 @@ algorithm; cf. PAPERS.md sliding-window cuckoo work for the motivation).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -68,31 +68,6 @@ def bloom_contains(bloom: bytes, n_bits: int, k: int, hashes: np.ndarray) -> np.
     idx = _indices(hashes.astype(np.uint64), n_bits, k)  # (k, n)
     present = (bits[(idx >> 3).astype(np.int64)] >> (idx & 7).astype(np.uint8)) & 1
     return present.all(axis=0).astype(bool)
-
-
-@dataclass
-class BloomShards:
-    """P bloom shards keyed by pmod(url_hash, P) — picklable, rides in the
-    task closure of the probe UDF."""
-
-    n_shards: int
-    shards: dict[int, tuple[bytes, int, int]]  # bucket -> (bits, n_bits, k)
-
-    def maybe_seen(self, url_hashes: np.ndarray) -> np.ndarray:
-        """True where the hash may be in the seen set (no false negatives:
-        an empty/missing shard means the bucket holds no seen keys →
-        False)."""
-        u = url_hashes.astype(np.int64).astype(np.uint64)
-        buckets = (url_hashes % self.n_shards + self.n_shards) % self.n_shards
-        out = np.zeros(len(url_hashes), dtype=bool)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            mask = buckets == b
-            bits, n_bits, k = shard
-            out[mask] = bloom_contains(bits, n_bits, k, u[mask])
-        return out
 
 
 def bloom_shards_df(
@@ -140,24 +115,6 @@ def bloom_shards_df(
             "bucket int, bloom binary, n_bits long, k int, n_keys long, "
             "gen int, full boolean",
         )
-    )
-
-
-def build_bloom_shards(
-    seen_df, n_shards: int = 32, fpp: float = 1e-3
-) -> "BloomShards":
-    """Collect the per-bucket shards into a picklable probe-side object.
-
-    At 10^10 scale the shards would persist in the snapshot store and be
-    updated incrementally per round (union of new selected hashes);
-    rebuild-per-round is the test-scale path.
-    """
-    rows = bloom_shards_df(seen_df, n_shards, fpp).collect()
-    return BloomShards(
-        n_shards=n_shards,
-        shards={
-            r["bucket"]: (bytes(r["bloom"]), r["n_bits"], r["k"]) for r in rows
-        },
     )
 
 
@@ -316,9 +273,6 @@ ADAPTIVE_BLOOM_ENGAGE_BYTES = 32 << 30
 # (~70 B avg on web corpora, prefix-dedup-hostile) + fetched_round int +
 # per-row parquet/arrow overhead
 SEEN_ROW_BYTES = 96
-# retained row-count form of the same threshold (back-compat; equal to
-# ADAPTIVE_BLOOM_ENGAGE_BYTES / SEEN_ROW_BYTES rounded to a decade)
-ADAPTIVE_BLOOM_ENGAGE_ROWS = ADAPTIVE_BLOOM_ENGAGE_BYTES // SEEN_ROW_BYTES
 
 
 def adaptive_seen_filter_factory(
@@ -345,9 +299,8 @@ def adaptive_seen_filter_factory(
     ``n_seen_end`` metric × a conservative row width approximates in one
     O(1) JSON read.  ``engage_rows`` (row-count form) is retained for
     tests/callers that reason in rows; when given it overrides the bytes
-    gate.  Stores written before the metric pay one count job (the chain
-    then self-heals via run_round).  The seen set is append-only, so the
-    decision is monotone: once engaged, always engaged."""
+    gate.  The seen set is append-only, so the decision is monotone: once
+    engaged, always engaged."""
 
     inner = inner_factory or bloom_seen_filter_factory(**bloom_kw)
     thresh_rows = (
@@ -357,38 +310,11 @@ def adaptive_seen_filter_factory(
     )
 
     def factory(spark, store, sid):
-        m = store.manifest(sid).get("metrics") or {}
-        n_seen = m.get("n_seen_end")
-        if n_seen is None:
-            try:
-                n_seen = store.read(spark, "seen", sid).count()
-            except FileNotFoundError:
-                n_seen = 0
-        if int(n_seen) < thresh_rows:
+        if int(store.manifest(sid)["metrics"]["n_seen_end"]) < thresh_rows:
             return None
         return inner(spark, store, sid)
 
     return factory
-
-
-def bloom_tag(df, shards: BloomShards, col: str = "url_hash"):
-    """Add `_maybe_seen`: True → must go through the exact anti-join;
-    False → provably unseen, may skip it.  mapInPandas so the shard dict
-    loads once per partition, probes whole batches."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("_maybe_seen", BooleanType(), False)]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            h = pdf[col].to_numpy(dtype=np.int64)
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = shards.maybe_seen(h)
-            yield pdf
-
-    return df.mapInPandas(probe, out_schema)
 
 
 # ---------------------------------------------------------------- cuckoo
@@ -526,28 +452,6 @@ class CuckooShard:
         return obj
 
 
-@dataclass
-class CuckooShards:
-    """P cuckoo shards keyed by pmod(url_hash, P) — the deletable
-    counterpart of BloomShards (same prune-never-decide contract: a
-    successfully-inserted key can never read as absent, so 'definitely
-    unseen' is sound; re-crawl eviction uses CuckooShard.delete)."""
-
-    n_shards: int
-    shards: dict[int, "CuckooShard"]
-
-    def maybe_seen(self, url_hashes: np.ndarray) -> np.ndarray:
-        buckets = (url_hashes % self.n_shards + self.n_shards) % self.n_shards
-        out = np.zeros(len(url_hashes), dtype=bool)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            mask = buckets == b
-            out[mask] = shard.contains_batch(url_hashes[mask])
-        return out
-
-
 def _cuckoo_build(keys: np.ndarray) -> CuckooShard:
     """Build one shard; on insert refusal (over-load), rebuild 2x bigger —
     the fallback path SURVEY.md §7.3 risk 4 demands."""
@@ -557,42 +461,6 @@ def _cuckoo_build(keys: np.ndarray) -> CuckooShard:
         if all(shard.insert(int(k)) for k in keys.astype(np.uint64)):
             return shard
         n *= 2
-
-
-def build_cuckoo_shards(seen_df, n_shards: int = 32) -> CuckooShards:
-    """One cuckoo shard per bucket via a grouped Arrow UDF; only the
-    finished shard bytes (uint16 tables) leave the executors."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-        shard = _cuckoo_build(keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "table": [shard.to_bytes()],
-                "n_buckets": [shard.n_buckets],
-            }
-        )
-
-    rows = (
-        seen_df.select(
-            "url_hash", F.pmod("url_hash", F.lit(n_shards)).alias("bucket")
-        )
-        .groupBy("bucket")
-        .applyInPandas(_build, "bucket int, table binary, n_buckets long")
-        .collect()
-    )
-    return CuckooShards(
-        n_shards=n_shards,
-        shards={
-            r["bucket"]: CuckooShard.from_bytes(
-                bytes(r["table"]), int(r["n_buckets"])
-            )
-            for r in rows
-        },
-    )
 
 
 _CK_SHARD_SCHEMA = "bucket int, table binary, n_buckets long, saturated boolean"
@@ -743,20 +611,3 @@ def cuckoo_seen_filter_factory(n_shards: int = 32):
         return StoreCuckooFilter(shards, n_shards)
 
     return factory
-
-
-def cuckoo_tag(df, shards: CuckooShards, col: str = "url_hash"):
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("_maybe_seen", BooleanType(), False)]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            h = pdf[col].to_numpy(dtype=np.int64)
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = shards.maybe_seen(h)
-            yield pdf
-
-    return df.mapInPandas(probe, out_schema)

@@ -113,8 +113,9 @@ _FRONT = (
     "snapshot_overwrite",
     "time_travel_read",
     # -- position 51+: rows-only flagship (refspec-pytest-verified; its
-    #    ordering/seen-set claims are hash-attested via crawl_fetch_log +
-    #    crawl_lineage_agg above) — deliberately past the 50-cut
+    #    fetch order is hash-attested via crawl_fetch_log above, its
+    #    lineage via crawl_lineage_agg on the earlier driver record —
+    #    that op is not in this window) — deliberately past the 50-cut
     "crawl_round",
 )
 

@@ -72,8 +72,17 @@ class SnapStore:
     def manifest(self, sid: int) -> dict:
         doc = self._manifest_cache.get(sid)
         if doc is None:
-            with open(self._manifest_path(sid)) as fh:
-                doc = json.load(fh)
+            path = self._manifest_path(sid)
+            with open(path) as fh:
+                try:
+                    doc = json.load(fh)
+                except ValueError as e:
+                    # the manifest is the crawl loop's only source of its
+                    # control values: say which file is bad, not where in
+                    # json the parse stopped
+                    raise ValueError(
+                        f"{path}: corrupt snapshot manifest ({e})"
+                    ) from None
             self._manifest_cache[sid] = doc
         return doc
 

@@ -10,11 +10,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engine.filters import (
-    BloomShards,
     CuckooShard,
     bloom_build,
     bloom_contains,
     bloom_params,
+    bloom_shards_df,
+    bloom_tag_store,
 )
 
 _keys = st.lists(
@@ -50,20 +51,25 @@ def test_bloom_fpp_bounded():
     assert fp < 5e-3, fp  # 5× slack over the 1e-3 design point
 
 
-def test_bloom_shards_no_false_negatives_across_buckets():
+def test_bloom_shards_no_false_negatives_across_buckets(spark):
+    """The crawl's probe path: bloom_tag_store over bloom_shards_df layers
+    reports every member maybe-seen whatever its bucket, and a probe
+    against an empty layer frame reports every row definitely-unseen."""
     hashes = (np.arange(5000, dtype=np.int64) - 2500) * 7919
-    shards = {}
     n_shards = 16
-    buckets = (hashes % n_shards + n_shards) % n_shards
-    for b in range(n_shards):
-        sub = hashes[buckets == b].astype(np.uint64)
-        n_bits, k = bloom_params(len(sub))
-        shards[b] = (bloom_build(sub, n_bits, k), n_bits, k)
-    bs = BloomShards(n_shards=n_shards, shards=shards)
-    assert bs.maybe_seen(hashes).all()
-    # empty-shard path: hashes of a bucket with no members → all False
-    bs2 = BloomShards(n_shards=n_shards, shards={})
-    assert not bs2.maybe_seen(hashes).any()
+    keys = spark.createDataFrame([(int(h),) for h in hashes], "url_hash long")
+    layers = bloom_shards_df(keys, n_shards)
+    assert layers.count() == n_shards  # signed keys land in every bucket
+
+    rows = bloom_tag_store(keys, layers, n_shards).collect()
+    assert sorted(r["url_hash"] for r in rows) == sorted(hashes.tolist())
+    assert all(r["_maybe_seen"] for r in rows)
+
+    # empty-shard path: no layer for any bucket → all False
+    no_layers = spark.createDataFrame([], layers.schema)
+    rows = bloom_tag_store(keys, no_layers, n_shards).collect()
+    assert len(rows) == len(hashes)
+    assert not any(r["_maybe_seen"] for r in rows)
 
 
 @given(_keys)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -174,6 +175,47 @@ def test_manifest_cache_is_coherent_and_hit_after_commit(tmp_path):
     metrics = store.commit_state(0, {}, metrics={"recommitted": True})
     assert metrics == {"recommitted": True}
     assert store.manifest(0)["metrics"] == {"recommitted": True}
+
+
+def test_corrupt_manifest_raises_value_error_naming_file(tmp_path):
+    """The manifest is the crawl loop's only source of its control values
+    (frontier_rows, fetch_seq_end, n_seen_end): a truncated or non-JSON
+    manifest must fail with a ValueError that names the file."""
+    root = str(tmp_path / "store")
+    store = SnapStore(root)
+    for sid in (0, 1):
+        store.commit_state(sid, {}, metrics={"frontier_rows": 1})
+    path = store._manifest_path(1)
+    for garbage in (b'{"snapshot": 1, "tab', b"\xff\xfe not json", b""):
+        with open(path, "wb") as fh:
+            fh.write(garbage)
+        with pytest.raises(ValueError, match=re.escape(path)):
+            SnapStore(root).manifest(1)
+    assert SnapStore(root).manifest(0)["metrics"] == {"frontier_rows": 1}
+
+
+def test_failed_round_releases_caches_and_conf(spark, xs, tmp_path_factory):
+    """A round that raises leaves the session as it found it: no cached
+    frame of the round or of the pages index stays persisted, and the AQE
+    conf that static_planning overrode is back to its prior value."""
+    from engine.crawl import static_planning
+
+    corpus, corpus_dir = xs
+    tables = load_corpus(spark, corpus_dir)
+    jsc = spark.sparkContext._jsc
+    aqe_before = spark.conf.get(static_planning.KEY, None)
+    # other tests share this session; only RDDs this crawl persists count
+    rdds_before = set(jsc.getPersistentRDDs().keys())
+
+    store = KillBeforeManifest(str(tmp_path_factory.mktemp("fail")), kill_at=2)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_crawl(
+            spark, store, tables["pages"], tables["robots"], tables["seeds"],
+            _cfg(corpus),
+        )
+    assert store.latest() == 1  # round 0 committed, round 1 failed
+    assert set(jsc.getPersistentRDDs().keys()) - rdds_before == set()
+    assert spark.conf.get(static_planning.KEY, None) == aqe_before
 
 
 class KillMidParallelWrite(SnapStore):
